@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .expr import AlwaysTrue, Expr, In
+from .io import read_files
 from .manifest import DataFile, harvest_stats
 from .metadata import Snapshot
 from .table import _LAST_UPDATED_COL, _ROW_ID_COL, lineage_preserving
@@ -383,8 +384,8 @@ def _write_dv_entries(
             # (r13: each pandas-UDF stage costs ~0.5 s fixed
             # JVM↔Python latency; tombstone spellings are
             # O(files-with-deletes))
-            pos_keys = table.spark.read.parquet(
-                *[d.path for d in pos_files]
+            pos_keys = read_files(
+                table.spark, [d.path for d in pos_files]
             ).select("file_path", "pos")
             psp = [
                 r[0] for r in pos_keys.select("file_path").distinct().collect()

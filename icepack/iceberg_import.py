@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .avroenc import read_container
+from .io import read_files
 
 
 def canonical_file_path(p: str) -> str:
@@ -669,7 +670,7 @@ def _read_with_name_mapping(
     # (e.g. lineage-present vs lineage-absent file groups), which plain
     # tuple comparison cannot order
     for plan, paths in sorted(groups.items(), key=lambda kv: repr(kv[0])):
-        raw = spark.read.parquet(*paths)
+        raw = read_files(spark, paths)
         cols = []
         for src, cur_name, _ftype in plan:
             if _ftype == "__lineage__":

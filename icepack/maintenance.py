@@ -16,6 +16,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from .io import read_files
 from .manifest import manifest_summary
 from .metadata import Snapshot, TableMetadata
 from .session import local_df
@@ -228,7 +229,7 @@ def rewrite_position_deletes(table) -> Snapshot | None:
     parts = []
     if pos:
         parts.append(
-            spark.read.parquet(*[f.path for f in pos]).select("file_path", "pos")
+            read_files(spark, [f.path for f in pos]).select("file_path", "pos")
         )
     if dvs:
         # v3 deletion-vectors fold back into the consolidated parquet
@@ -392,7 +393,7 @@ def write_deletion_vectors(
     parts = []
     if pos:
         parts.append(
-            spark.read.parquet(*[f.path for f in pos]).select("file_path", "pos")
+            read_files(spark, [f.path for f in pos]).select("file_path", "pos")
         )
     if dvs:
         parts.append(dv_positions_df(spark, dvs))
@@ -447,10 +448,9 @@ def _consolidate_dvs_driver_side(pos, dvs, live_by_norm) -> list | None:
     raw manifest spellings, and build the per-file roaring blobs — all
     bounded by the EXACT tombstone row count the manifest entries
     already carry.  Returns None (caller keeps the distributed lane)
-    past the gates, when a tombstone file is not driver-readable, or
-    when pyarrow is unavailable."""
-    import os as _os2
-
+    when any entry's count is unknown, past the gates, when a
+    tombstone file is not driver-readable, or when pyarrow is
+    unavailable."""
     from .dv import (
         DV_DRIVER_BUILD_MAX_ROWS,
         build_dv_blob_rows,
@@ -458,22 +458,28 @@ def _consolidate_dvs_driver_side(pos, dvs, live_by_norm) -> list | None:
     )
     from .iceberg_import import canonical_file_path
 
-    total = sum(int(f.record_count or 0) for f in pos) + sum(
-        int(d.record_count or 0) for d in dvs
-    )
+    total = 0
+    for e in [*pos, *dvs]:
+        if not e.record_count:
+            return None  # unknown volume: stay distributed
+        total += int(e.record_count)
     if total > DV_DRIVER_BUILD_MAX_ROWS:
         return None
-    if any(not _os2.path.isfile(f.path) for f in pos):
+    if any(not os.path.isfile(f.path) for f in pos):
         return None  # non-local tombstones: let Spark read them
     try:
         import pandas as pd
+        import pyarrow as pa
         import pyarrow.parquet as pq
     except Exception:  # pragma: no cover — pyarrow/pandas unavailable
         return None
+    # the canonical tombstone schema _pos_deletes_local casts to: files
+    # from other engines differ in nullability and string encoding
+    want = pa.schema([("file_path", pa.string()), ("pos", pa.int64())])
     frames = []
     for f in pos:
         frames.append(
-            pq.read_table(f.path, columns=["file_path", "pos"]).to_pandas()
+            pq.read_table(f.path, columns=["file_path", "pos"]).cast(want).to_pandas()
         )
     if dvs:
         dvf = dv_positions_pandas(dvs)

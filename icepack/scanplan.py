@@ -67,6 +67,7 @@ from .expr import (
     manifest_may_match,
     project_to_partition,
 )
+from .io import read_files
 from .manifest import DataFile, read_manifest_list
 from .storage import LocalStore
 
@@ -420,7 +421,7 @@ def manifest_lines_df(table, names: list[str]) -> DataFrame | None:
         return None
     any_avro = any(n.endswith(".avro") for n in names)
     if isinstance(table.store, LocalStore) and not any_avro:
-        return table.spark.read.text(paths)
+        return read_files(table.spark, paths, fmt="text")
     store_pkl = _pickled_store(table.store)
     if store_pkl is None:
         return None
@@ -552,7 +553,7 @@ def entries_df_for_manifests(
         rdd = table.spark.sparkContext.parallelize(lines or [], max(1, len(paths)))
         return table.spark.read.json(rdd, schema=ENTRY_SCHEMA)
     if isinstance(store, LocalStore):
-        return table.spark.read.json(paths, schema=ENTRY_SCHEMA)
+        return read_files(table.spark, paths, fmt="json", schema=ENTRY_SCHEMA)
     if store_pkl is not None:
         # Non-POSIX but PICKLABLE store (S3Store: a handful of strings
         # plus a module-function transport): ship it into the closure

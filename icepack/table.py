@@ -19,11 +19,13 @@ readable for time travel (docs/05-snapshots-time-travel.md).
 
 Read path (docs/09-query-performance.md:17-55): snapshot → manifest
 list (phase-1 partition pruning on partition summaries) → manifests
-(phase-2 file pruning on column min/max/null stats) → a plain
-``spark.read.parquet`` DataFrame over the surviving files (phase-3
-row-group pruning is the stock vectorized Parquet reader).  Everything
-downstream of ``toDF()`` is stock Catalyst — joins/aggs/windows over
-IceTables use the relational battery unchanged.
+(phase-2 file pruning on column min/max/null stats) → a plain parquet
+DataFrame over the surviving files (phase-3 row-group pruning is the
+stock vectorized Parquet reader).  The manifests already name those
+files, so ``icepack.io.read_files`` lists them on the driver and never
+by a Spark job.  Everything downstream of ``toDF()`` is stock Catalyst
+— joins/aggs/windows over IceTables use the relational battery
+unchanged.
 
 Scale: metadata ops are driver-side JSON (a few KB per commit); every
 data movement is a distributed Spark job.  File counts per commit
@@ -53,6 +55,7 @@ from .expr import (
     partition_tuple_matches,
     project_to_partition,
 )
+from .io import read_files
 from .manifest import (
     DataFile,
     harvest_stats,
@@ -1300,7 +1303,7 @@ class IceTable:
                         T.StructField(_LAST_UPDATED_COL, T.LongType()),
                     ]
                 )
-            df = self.spark.read.schema(read_struct).parquet(*[f.path for f in group])
+            df = read_files(self.spark, [f.path for f in group], schema=read_struct)
             cols = []
             for cf in current.fields:
                 of = old.field_by_id(cf.id)
@@ -1367,7 +1370,7 @@ class IceTable:
             groups.setdefault(tuple(plan), []).append(f.path)
         parts = []
         for plan, paths in sorted(groups.items()):
-            raw = self.spark.read.parquet(*paths)
+            raw = read_files(self.spark, paths)
             cols = []
             for src, cur_name, _ftype in plan:
                 cf = current.field_by_name(cur_name)
@@ -1944,7 +1947,7 @@ class IceTable:
                     pos_paths = []
             if pos_paths:
                 dels = (
-                    self.spark.read.parquet(*pos_paths)
+                    read_files(self.spark, pos_paths)
                     .select("file_path", "pos")
                     .distinct()
                 )
@@ -2023,7 +2026,7 @@ class IceTable:
                 dels = self._eq_deletes_local(dentries, eq_map)
                 if dels is None:
                     dels = (
-                        self.spark.read.parquet(*[d.path for d, _ in dentries])
+                        read_files(self.spark, [d.path for d, _ in dentries])
                         .select(
                             *[
                                 F.col(old).alias(f"_del_{cur}")

@@ -696,3 +696,77 @@ def test_pos_delete_scan_lanes_agree(spark, tmp_path, monkeypatch):
     assert t._pos_deletes_local(pos) is not None
     monkeypatch.setattr(dv, "DV_DRIVER_BUILD_MAX_ROWS", 0)
     assert t._pos_deletes_local(pos) is None
+
+
+def _consolidation_inputs(spark, tmp_path):
+    """A v2 MOR table with one position delete, then one folded into a
+    DV and a second position delete: (pos, dvs, live_by_norm)."""
+    from icepack.iceberg_import import canonical_file_path
+
+    t, _df = _mor_table(spark, tmp_path, n=200)
+    t.delete(col("id") < 10)
+    M.write_deletion_vectors(t)
+    t.delete((col("id") >= 100) & (col("id") < 110))
+    live = t.live_files(content="all")
+    pos = [f for f in live if f.content == "position-deletes"]
+    dvs = [f for f in live if f.content == "deletion-vectors"]
+    assert pos and dvs
+    live_by_norm = {
+        canonical_file_path(f.path): f.path for f in live if f.content == "data"
+    }
+    return pos, dvs, live_by_norm
+
+
+def test_consolidation_driver_lane_refuses_unknown_counts(spark, tmp_path):
+    """The driver consolidation lane is gated on the tombstones' exact
+    manifest record counts; an entry without one (adopted trees may
+    omit it) must send the caller to the distributed lane, as the
+    scan-side and DML driver lanes do."""
+    import dataclasses
+
+    from icepack.maintenance import _consolidate_dvs_driver_side
+
+    pos, dvs, live_by_norm = _consolidation_inputs(spark, tmp_path)
+    assert _consolidate_dvs_driver_side(pos, dvs, live_by_norm)
+    for unknown in (None, 0):
+        bad_pos = [dataclasses.replace(pos[0], record_count=unknown), *pos[1:]]
+        assert _consolidate_dvs_driver_side(bad_pos, dvs, live_by_norm) is None
+        bad_dvs = [dataclasses.replace(dvs[0], record_count=unknown), *dvs[1:]]
+        assert _consolidate_dvs_driver_side(pos, bad_dvs, live_by_norm) is None
+
+
+def test_consolidation_driver_lane_casts_tombstones(spark, tmp_path, monkeypatch):
+    """Foreign tombstone files (dictionary-encoded paths, int32
+    positions) reach the bitmap build as the canonical (file_path
+    string, pos int64) frame, and build the same blobs as the
+    engine's own files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import icepack.dv as dv
+    from icepack.maintenance import _consolidate_dvs_driver_side
+
+    pos, _dvs, live_by_norm = _consolidation_inputs(spark, tmp_path)
+    want = _consolidate_dvs_driver_side(pos, [], live_by_norm)
+    for f in pos:
+        tbl = pq.read_table(f.path, columns=["file_path", "pos"])
+        pq.write_table(
+            pa.table(
+                {
+                    "file_path": tbl["file_path"].dictionary_encode(),
+                    "pos": tbl["pos"].cast(pa.int32()),
+                }
+            ),
+            f.path,
+        )
+    seen = []
+    build = dv.build_dv_blob_rows
+
+    def spy(pdf):
+        seen.append(pdf.dtypes.astype(str).to_dict())
+        return build(pdf)
+
+    monkeypatch.setattr(dv, "build_dv_blob_rows", spy)
+    got = _consolidate_dvs_driver_side(pos, [], live_by_norm)
+    assert seen == [{"file_path": "object", "pos": "int64"}]
+    assert got == want

@@ -1,6 +1,7 @@
 """Table core: create/append/scan round-trips, time travel, pruning,
 concurrent-commit CAS (SURVEY.md §5.3)."""
 
+import glob
 import os
 import threading
 
@@ -443,28 +444,70 @@ def test_predicted_scan_spelling(spark, tmp_path):
     for bad in ["/a b/c", "/a%41/c", "/a#1/c", "/a//b", "rel/path",
                 "s3://bucket/key", "file:/already/uri", "/uni/é.parquet"]:
         assert predicted_scan_spelling(bad) is None, bad
+    # more explicit paths than the parallel-listing threshold (32), read
+    # through the engine's reader: statuses listed on the driver must
+    # spell each path exactly as the listing job's statuses do
+    from icepack.io import read_files
+
+    paths = []
+    for name in safe_dirs:
+        d = str(tmp_path / "wide" / name)
+        spark.range(64).repartition(8).write.parquet(d)
+        paths += sorted(glob.glob(os.path.join(d, "part-*.parquet")))
+    assert len(paths) > 32
+    got = {
+        r[0] for r in read_files(spark, paths).select("_metadata.file_path").collect()
+    }
+    assert got == {predicted_scan_spelling(p) for p in paths}
 
 
 def test_schema_memo_invalidates_on_rewrite(spark, tmp_path):
     """r13 verdict item 1: the fixture schema memo keys on (path,
     mtime_ns, size), so a path REWRITTEN in-process with a different
     schema re-infers instead of serving nulls through a stale schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     import icepack.io as io
 
     d = str(tmp_path)
     p = os.path.join(d, "part.parquet")
-    spark.range(3).selectExpr("id AS p_partkey").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(p)
+    pq.write_table(pa.table({"p_partkey": [0, 1, 2]}), p)
     first = io.load(spark, d, "part")
     assert first.columns == ["p_partkey"]
     assert any(k[0] == p for k in io._SCHEMA_MEMO)
     # rewrite the same path with a DIFFERENT schema (bump mtime to be
     # robust against same-second writes on coarse filesystems)
-    spark.range(3).selectExpr(
-        "id AS p_partkey", "CAST(id AS STRING) AS p_name"
-    ).coalesce(1).write.mode("overwrite").parquet(p)
+    pq.write_table(
+        pa.table({"p_partkey": [0, 1, 2], "p_name": ["0", "1", "2"]}), p
+    )
     os.utime(p, ns=(1, 1))
+    second = io.load(spark, d, "part")
+    assert second.columns == ["p_partkey", "p_name"]
+    assert second.filter("p_name IS NULL").count() == 0
+
+
+def test_schema_memo_skips_directory_layouts(spark, tmp_path):
+    """A directory's mtime does not move when a file inside it is
+    rewritten in place, so directory-style parquet is never memoized:
+    the rewritten file's schema is read, not the first one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import icepack.io as io
+
+    d = str(tmp_path)
+    p = os.path.join(d, "part.parquet")
+    os.mkdir(p)
+    part = os.path.join(p, "part-0.parquet")
+    pq.write_table(pa.table({"p_partkey": [0, 1, 2]}), part)
+    stamp = os.stat(p).st_mtime_ns
+    assert io.load(spark, d, "part").columns == ["p_partkey"]
+    assert not any(k[0] == p for k in io._SCHEMA_MEMO)
+    pq.write_table(
+        pa.table({"p_partkey": [0, 1, 2], "p_name": ["0", "1", "2"]}), part
+    )
+    assert os.stat(p).st_mtime_ns == stamp  # in-place rewrite
     second = io.load(spark, d, "part")
     assert second.columns == ["p_partkey", "p_name"]
     assert second.filter("p_name IS NULL").count() == 0
