@@ -260,7 +260,7 @@ def main() -> None:
             "common_subset_ratio": ratio,
             "stream_rows_per_sec_prev": prev_parsed.get("stream_rows_per_sec"),
         }
-    # sf1 ladder rows (tools/scale_ladder.py 10× rung, re-measured each
+    # sf1 ladder rows (10× rung, re-measured each
     # round): embedded so the sf1 trend is machine-tracked in BENCH_r*
     # rather than living only in SCALE.md prose
     sf1 = None

@@ -104,15 +104,26 @@ def ivf_topk(
     """Top-k cosine neighbors of ``query_vec`` searching only the
     ``nprobe`` clusters nearest the query (the IVF probe)."""
     q = np.asarray(list(query_vec), dtype=np.float64)
-    # _dot unrolls over len(q): a STORED embedding wider than the query
-    # would silently truncate its self-norm (ADVICE r13) — validate the
-    # width from the data itself before planning (one row, driver-side)
-    first = e.select(F.size("embedding").alias("n")).first()
-    if first is not None and first["n"] != len(q):
+    dim = cents.shape[1]
+    if len(q) != dim:
         raise ValueError(
-            f"query vector has {len(q)} dims but stored embeddings have "
-            f"{first['n']} — ivf_topk requires equal widths"
+            f"query vector has {len(q)} dims but the centroids have {dim} "
+            "— ivf_topk requires equal widths"
         )
+    # _dot unrolls over the width: a stored embedding of another width
+    # would silently truncate, so every row is checked in the plan
+    # (no job runs here)
+    e = e.withColumn(
+        "embedding",
+        F.when(F.size("embedding") == dim, F.col("embedding")).otherwise(
+            F.raise_error(
+                F.format_string(
+                    f"ivf_topk: embedding of vec_id %s does not have {dim} dims",
+                    F.col("vec_id").cast("string"),
+                )
+            )
+        ),
+    )
     d2 = ((cents - q) ** 2).sum(axis=1)
     probes = [int(i) for i in np.argsort(d2)[:nprobe]]
     qlit = F.array(*[F.lit(float(x)) for x in q])

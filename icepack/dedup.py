@@ -273,7 +273,7 @@ def _mining_shuffle_partitions(table, default_bytes: int = 1 << 20) -> int | Non
     Why (r10 verdict, the one measured scale-killer left in the LLM
     path): mining shuffles at a fixed session width hit the
     external-sort spill regime once the per-partition working set
-    outgrows memory — tools/shuffle_probe.py measured 1.5-3× recovery
+    outgrows memory — a shuffle-width probe measured 1.5-3× recovery
     at the 300× unique rung from scaling ``spark.sql.shuffle.
     partitions`` with the corpus.  The plane count became data-aware in
     r10; this makes the shuffle width data-aware the same way.
@@ -365,8 +365,7 @@ def dedupe_table(
     bucket) instead of k²/2 cliques — the clusters are provably
     identical for the connected-components consumer, and it is what
     keeps a duplicate-saturated 100 TB corpus from going quadratic in
-    its hottest bucket (ladder-measured: tools/dedup_ladder.py
-    --table, SCALE.md round-10).
+    its hottest bucket (ladder-measured, SCALE.md round-10).
 
     Survivor policy: ``keep='min-id'`` (default) keeps MIN(id) per
     group; ``keep='best'`` keeps the row with the highest

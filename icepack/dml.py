@@ -232,42 +232,6 @@ def _dml_writes_dvs(table) -> bool:
     return spec_format_version(table.meta.properties) >= 3
 
 
-def _dv_build_driver_lane_ok(table, hit: list, deletes: list, bounded: bool) -> bool:
-    """Gate for the driver-side DV build lane: True only when EVERY
-    input is provably bounded — the matched identities by the planned
-    files' record counts (``bounded`` is False for MERGE, whose inner
-    join can exceed that bound under duplicate source keys), prior DVs
-    by the decode gates, v2 tombstone parquet by its manifest record
-    counts and local readability."""
-    import os as _os
-
-    from .dv import DV_DRIVER_BUILD_MAX_ROWS, driver_decodable
-
-    if not bounded:
-        return False
-    total = 0
-    for f in hit:
-        if not f.record_count:
-            return False
-        total += int(f.record_count)
-    prior = [d for d in deletes if d.content == "deletion-vectors"]
-    if prior and not driver_decodable(prior):
-        return False
-    for d in deletes:
-        if d.content == "position-deletes":
-            if not d.record_count or not _os.path.isfile(d.path):
-                return False
-            total += int(d.record_count)
-    if total > DV_DRIVER_BUILD_MAX_ROWS:
-        return False
-    try:
-        import pandas  # noqa: F401
-        import pyarrow.parquet  # noqa: F401
-    except Exception:  # pragma: no cover — pyarrow/pandas unavailable
-        return False
-    return True
-
-
 def _write_dv_entries(
     table, keys: DataFrame, hit: list, bounded: bool = True
 ) -> tuple[list[DataFile], set[str]]:
@@ -285,32 +249,45 @@ def _write_dv_entries(
       path compares against (same discipline as the maintenance
       consolidation).
     - v3's ONE-DV-PER-FILE rule: a prior DV of a touched file is
-      decoded (executor-side) and unioned into the new bitmap, and its
+      decoded and unioned into the new bitmap, and its
       Puffin path lands in ``replaced_paths``; co-located blobs for
       UNTOUCHED files in a replaced Puffin are carried forward by
       reference (same path/offset) so their bytes are never rewritten.
-    - bitmap construction is ``dv.build_dv_blobs`` (applyInPandas —
-      positions never visit the driver); only finished roaring blobs
-      are collected for Puffin framing."""
+    - past the :func:`icepack.dv.driver_deletes` gate, bitmap
+      construction is ``dv.build_dv_blobs`` (applyInPandas — positions
+      never visit the driver); only finished roaring blobs are
+      collected for Puffin framing."""
     import dataclasses
 
-    from .dv import build_dv_blobs, dv_positions_df, write_dv_puffins
+    from .dv import (
+        build_dv_blob_rows,
+        build_dv_blobs,
+        driver_deletes,
+        dv_positions_df,
+        write_dv_puffins,
+    )
     from .iceberg_import import canonical_file_path
 
     deletes = table.live_files(content="deletes")
-    driver_lane = _dv_build_driver_lane_ok(table, hit, deletes, bounded)
-    if driver_lane:
-        # gated driver lane (guide §4): the matched identities are
-        # bounded by the planned files' record counts, so ONE Arrow
-        # toPandas job replaces the distinct-spelling collect, the
-        # broadcast substitution join, the tombstone unions, and the
-        # fixed-latency ``build_dv_blobs`` applyInPandas stage.  Blob
-        # bytes are identical by construction (dv.build_dv_blob_rows);
-        # past the gate the distributed lane below runs unchanged.
+    prior = [d for d in deletes if d.content == "deletion-vectors"]
+    pos_files = [d for d in deletes if d.content == "position-deletes"]
+    # gated driver lane (dv.driver_deletes): the matched identities are
+    # bounded by the planned files' record counts (not for MERGE,
+    # whose inner join can exceed that bound under duplicate source
+    # keys), so ONE Arrow toPandas job replaces the distinct-spelling
+    # collect, the broadcast substitution join, the tombstone unions,
+    # and the fixed-latency ``build_dv_blobs`` applyInPandas stage.
+    # Blob bytes are identical by construction (dv.build_dv_blob_rows);
+    # past the gate the distributed lane below runs unchanged.
+    old = None
+    if bounded and all(f.record_count for f in hit):
+        old = driver_deletes(
+            prior + pos_files, extra_rows=sum(int(f.record_count) for f in hit)
+        )
+    if old is not None:
         pdf = keys.toPandas()
         spellings = list(pdf["file_path"].unique())
     else:
-        pdf = None
         spellings = [r[0] for r in keys.select("file_path").distinct().collect()]
     if not spellings:
         return [], set()
@@ -326,42 +303,26 @@ def _write_dv_entries(
     from .session import local_df
 
     touched = {raw for _, raw in pairs}
-    prior = [d for d in deletes if d.content == "deletion-vectors"]
     merged = [d for d in prior if d.referenced_data_file in touched]
-    pos_files = [d for d in deletes if d.content == "position-deletes"]
     touch_by_cn = {c: raw for c, raw in by_canon.items() if raw in touched}
-    if driver_lane:
+    if old is not None:
         import pandas as pd
 
-        from .dv import build_dv_blob_rows, dv_positions_pandas
-
-        raw_by_spelling = dict(pairs)
-        frames = [
-            pdf.assign(file_path=pdf["file_path"].map(raw_by_spelling))
-        ]
-        if merged:
-            frames.append(dv_positions_pandas(merged))  # gate pre-checked
-        if pos_files:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            want = pa.schema([("file_path", pa.string()), ("pos", pa.int64())])
-            tbls = [
-                pq.read_table(d.path, columns=["file_path", "pos"]).cast(want)
-                for d in pos_files
-            ]
-            pk = (
-                pa.concat_tables(tbls) if len(tbls) > 1 else tbls[0]
-            ).to_pandas()
-            remap = {
-                s: touch_by_cn.get(canonical_file_path(s))
-                for s in pk["file_path"].unique()
-            }
-            pk = pk.assign(file_path=pk["file_path"].map(remap))
-            # non-touched files' tombstones drop, as before
-            frames.append(pk[pk["file_path"].notna()])
+        # prior DVs and v2 tombstones of untouched files drop
+        old = old.to_pandas()
+        remap = {
+            s: touch_by_cn.get(canonical_file_path(s))
+            for s in old["file_path"].unique()
+        }
+        old = old.assign(file_path=old["file_path"].map(remap))
         blobs = build_dv_blob_rows(
-            pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+            pd.concat(
+                [
+                    pdf.assign(file_path=pdf["file_path"].map(dict(pairs))),
+                    old[old["file_path"].notna()],
+                ],
+                ignore_index=True,
+            )
         )
     else:
         spell_map = local_df(table.spark, pairs, "file_path string, _raw string")

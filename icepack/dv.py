@@ -1,19 +1,26 @@
-"""Spark-side deletion-vector plumbing (Iceberg v3, docs/08 MOR story).
+"""Deletion-vector plumbing (Iceberg v3, docs/08 MOR story), and the
+one driver-side reader of small delete sets.
 
 :mod:`icepack.roaring` is the pure-bytes codec; this module is the
-distributed layer on top of it:
+layer on top of it:
 
+- :func:`driver_deletes` — the gated driver read of delete files.
+  Position-delete and equality-delete parquet and DV blobs whose
+  summed manifest ``record_count`` is at most :data:`DRIVER_MAX_ROWS`
+  are read with pyarrow into one Arrow table.  Every driver lane of
+  the engine (MOR scans, the v3 DML bitmap build, DV consolidation,
+  :func:`dv_positions_df`) goes through it; past the bound, or when a
+  count is unknown, the caller keeps its distributed Spark path.
 - :func:`dv_positions_df` — decode DV blobs into a ``(file_path, pos)``
-  DataFrame IN EXECUTORS (one task per blob batch, Arrow-batched
-  ``mapInPandas``): a table with thousands of deletion vectors never
-  materializes its deleted positions on the driver.  The output feeds
-  the same broadcast anti-join the v2 position-delete path uses.
+  DataFrame: on the driver under the bound, else IN EXECUTORS (one
+  task per blob batch, Arrow-batched ``mapInPandas``).  The output
+  feeds the same broadcast anti-join the v2 position-delete path uses.
 - :func:`build_dv_blobs` — the reverse direction: a ``(file_path,
   pos)`` tombstone DataFrame grouped per target data file into framed
   ``deletion-vector-v1`` blob bytes, built by ``applyInPandas`` so the
   bitmap construction for a million files fans out across the cluster.
   Only the FINISHED blobs (roaring-compressed, ~KBs per file) travel
-  to the driver for Puffin assembly — positions never do.
+  to the driver for Puffin assembly.
 
 DV Puffin files live in the table's ``data/`` directory next to the
 parquet they mask, so they are Spark/executor-reachable by plain path
@@ -22,6 +29,8 @@ metadata tree, not the data dir).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,109 +42,83 @@ POS_FIELD_ID = 2147483545
 #: Puffin blob type from the Iceberg v3 spec.
 DV_BLOB_TYPE = "deletion-vector-v1"
 
-#: Total serialized DV bytes under which :func:`dv_positions_df`
-#: decodes on the DRIVER instead of planting a Python stage.  The DV
-#: anti-join BROADCASTS the decoded positions anyway (they reach the
-#: driver as a built hash relation regardless), so the gate only moves
-#: a ~ms roaring decode across the boundary — and removes the ~0.5 s
-#: fixed JVM↔Python stage latency the executor lane pays per scan
-#: (guide §4: the boundary costs, not the bytes).  Past the gate —
-#: where a broadcast would also stop being the right join — the
-#: executor lane is unchanged.
-import os as _os
-
-DV_DRIVER_DECODE_MAX_BYTES = int(
-    _os.environ.get("ICEPACK_DV_DRIVER_DECODE_MAX_BYTES", str(8 * 1024 * 1024))
-)
-
-#: Decoded-CARDINALITY companion gate (r13 verdict: roaring run
-#: containers compress brutally well, so a few serialized bytes can
-#: decode to millions of positions — the bytes gate alone under-counts
-#: what the driver would materialize).  The blob cardinality is pinned
-#: in each DV entry's ``record_count`` at write time, so the check is
-#: exact and free; an entry with no usable count fails the gate.
-DV_DRIVER_DECODE_MAX_ROWS = int(
-    _os.environ.get("ICEPACK_DV_DRIVER_DECODE_MAX_ROWS", str(4_000_000))
-)
-
-#: Row bound under which DV BITMAP CONSTRUCTION (the reverse direction:
-#: tombstone rows → roaring blobs) may run driver-side.  The metadata
-#: gives an exact upper bound before any job runs (delete-file
-#: record counts / planned-file record counts), so the gate never
-#: guesses; past it the ``build_dv_blobs`` applyInPandas lane runs
-#: unchanged — at 100 TB tombstone volumes that distributed lane is
-#: the only correct shape, the driver lane exists because a Python
-#: executor stage costs ~0.5 s of fixed boundary latency that dwarfs
-#: the ~ms bitmap build at metadata-scale inputs (guide §4).
-DV_DRIVER_BUILD_MAX_ROWS = int(
-    _os.environ.get("ICEPACK_DV_DRIVER_BUILD_MAX_ROWS", str(4_000_000))
-)
+#: Row bound under which a delete set is read on the driver
+#: (:func:`driver_deletes`).  The manifests carry each delete file's
+#: exact row count (a DV's count is its cardinality), so the gate
+#: costs no job and never guesses.  Below it, a ~ms pyarrow read
+#: replaces a Spark read or a Python executor stage whose fixed
+#: boundary latency is ~0.5 s; the small sets it admits are
+#: broadcast into the anti-join anyway.  A DV blob needs no byte
+#: bound of its own: every roaring container holds at least one
+#: position, so a blob's bytes grow with its cardinality.
+DRIVER_MAX_ROWS = 4_000_000
 
 
-def driver_decodable(entries) -> bool:
-    """True when the DV entries are small enough (serialized bytes AND
-    decoded cardinality) to decode driver-side."""
-    total_bytes = 0
-    total_rows = 0
+def driver_deletes(entries, schema=None, extra_rows: int = 0):
+    """Read delete ``entries`` on the driver into one Arrow table of
+    ``schema``, or return None when the caller must keep its Spark path.
+
+    The gate: every entry's ``record_count`` is known and above 0,
+    every entry's file is local, and the summed counts plus
+    ``extra_rows`` (rows the caller adds itself) are at most
+    :data:`DRIVER_MAX_ROWS`.  Parquet entries are read by column name
+    and cast to ``schema``, by default the tombstone schema
+    ``(file_path string, pos int64)``: delete files from other engines
+    differ in nullability, string encoding and position width, which
+    ``concat_tables`` would treat as different schemas.
+    Deletion-vector entries (tombstone schema only) decode to
+    ``(referenced_data_file, pos)`` rows."""
+    entries = list(entries)
+    total = extra_rows
     for e in entries:
-        total_bytes += int(e.content_size or 0)
         rc = e.record_count
-        if rc is None or int(rc) <= 0:
-            return False  # unknown cardinality: stay in the executor lane
-        total_rows += int(rc)
-    return (
-        total_bytes <= DV_DRIVER_DECODE_MAX_BYTES
-        and total_rows <= DV_DRIVER_DECODE_MAX_ROWS
-    )
-
-
-def dv_positions_pandas(entries):
-    """Driver-side decode of DV entries → one pandas ``(file_path,
-    pos)`` frame, or None when the entries exceed the driver gates.
-    The callers that would broadcast the decoded positions anyway
-    (DV-masked scans, small-table consolidation) use this to keep the
-    ~ms roaring decode out of a fixed-latency Python executor stage."""
-    if not driver_decodable(entries):
+        if rc is None or rc <= 0 or not os.path.isfile(e.path):
+            return None
+        total += int(rc)
+    if total > DRIVER_MAX_ROWS:
         return None
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from .roaring import read_dv_blob
 
-    frames = []
+    if schema is None:
+        schema = pa.schema([("file_path", pa.string()), ("pos", pa.int64())])
+    tbls = []
     for e in entries:
-        with open(e.path, "rb") as fh:
-            fh.seek(int(e.content_offset))
-            data = fh.read(int(e.content_size))
-        pos = read_dv_blob(data)
-        frames.append(
-            pd.DataFrame(
-                {"file_path": e.referenced_data_file, "pos": pos.astype("int64")}
+        if e.content == "deletion-vectors":
+            with open(e.path, "rb") as fh:
+                fh.seek(int(e.content_offset))
+                pos = read_dv_blob(fh.read(int(e.content_size)))
+            tbls.append(
+                pa.table(
+                    [
+                        pa.repeat(pa.scalar(e.referenced_data_file), len(pos)),
+                        pa.array(pos.astype("int64")),
+                    ],
+                    schema=schema,
+                )
             )
-        )
-    if not frames:
-        return pd.DataFrame({"file_path": pd.Series([], dtype=object),
-                             "pos": pd.Series([], dtype="int64")})
-    return pd.concat(frames, ignore_index=True)
+        else:
+            tbls.append(pq.read_table(e.path, columns=schema.names).cast(schema))
+    return pa.concat_tables(tbls) if tbls else schema.empty_table()
 
 
 def dv_positions_df(spark: SparkSession, entries) -> DataFrame:
     """Decode deletion-vector manifest entries → ``(file_path, pos)``.
 
     ``entries`` are ``DataFile`` rows with content ``deletion-vectors``
-    (identity = (path, content_offset)).  Decoding happens in
-    executors — or on the driver below the
-    ``DV_DRIVER_DECODE_MAX_BYTES`` / ``DV_DRIVER_DECODE_MAX_ROWS``
-    gates (see above); ``file_path`` is the entry's
-    ``referenced_data_file`` (the raw manifest spelling of the target
-    data file)."""
+    (identity = (path, content_offset)).  Under the
+    :func:`driver_deletes` gate the decode runs on the driver and the
+    frame is a LocalTableScan; past it, decoding happens in executors.
+    ``file_path`` is the entry's ``referenced_data_file`` (the raw
+    manifest spelling of the target data file)."""
     entries = list(entries)
     from .session import local_df
 
-    pdf = dv_positions_pandas(entries)
-    if pdf is not None:
-        if not len(pdf):
-            return spark.createDataFrame([], "file_path string, pos long")
-        return spark.createDataFrame(pdf, "file_path string, pos long")
+    tbl = driver_deletes(entries)
+    if tbl is not None:
+        return spark.createDataFrame(tbl, "file_path string, pos long")
     refs = [
         (e.path, int(e.content_offset), int(e.content_size), e.referenced_data_file)
         for e in entries
@@ -246,13 +229,12 @@ def write_dv_puffins(
 
 
 def build_dv_blob_rows(pdf) -> list:
-    """Driver-side twin of :func:`build_dv_blobs` for gated small
-    inputs: a pandas ``(file_path, pos)`` frame → ``[{file_path, blob,
-    cardinality}]``.  Bytes are identical by construction (same
-    ``np.unique`` + ``dv_blob_bytes`` per file as the applyInPandas
-    lane — pinned by tests) so the two lanes can never disagree; the
-    caller chooses the lane by a bounded row-count gate, exactly like
-    the decode direction above."""
+    """Driver-side twin of :func:`build_dv_blobs` for inputs under the
+    :func:`driver_deletes` gate: a pandas ``(file_path, pos)`` frame →
+    ``[{file_path, blob, cardinality}]``.  Bytes are identical by
+    construction (same ``np.unique`` + ``dv_blob_bytes`` per file as
+    the applyInPandas lane — pinned by tests) so the two lanes can
+    never disagree."""
     import numpy as np
 
     from .roaring import dv_blob_bytes

@@ -752,7 +752,7 @@ def _entry_record(table, f, status: int, snapshot_id: int) -> dict:
 
 
 #: auto flip point for the distributed export encode — MEASURED
-#: (tools/maint_bench.py r12, export_sec column): driver 0.5 s vs
+#: (r12, export_sec column): driver 0.5 s vs
 #: distributed 0.73 s at 4k entries, 1.18 vs 0.78 at 8k, 12.95 vs 1.44
 #: at 128k, 50.3 vs 4.3 at 512k.  The per-entry driver cost (~0.1 ms of
 #: pure-Python record build + Avro encode) is ~25× the fsck walk's, so

@@ -304,7 +304,13 @@ def write_deletion_vectors(
     Equality deletes are left alone (sequence-ordered application;
     ``compact()`` retires them) — same contract as the parquet
     consolidation."""
-    from .dv import build_dv_blobs, dv_positions_df, write_dv_puffins
+    from .dv import (
+        build_dv_blob_rows,
+        build_dv_blobs,
+        driver_deletes,
+        dv_positions_df,
+        write_dv_puffins,
+    )
     from .iceberg_import import canonical_file_path
     from .manifest import DataFile
 
@@ -369,24 +375,31 @@ def write_deletion_vectors(
         return None  # already consolidated (or nothing to do)
     if live_by_norm is not None:
         # FULL driver lane (guide §4 boundary-cost removal): below the
-        # exact metadata row bound the whole consolidation — tombstone
+        # dv.driver_deletes row bound the whole consolidation — tombstone
         # parquet read, DV decode, spelling substitution, bitmap build —
         # is bounded driver work, and the Spark shape it replaces was
         # two collects plus a fixed-latency applyInPandas stage over
         # the same driver-bound data.  Zero Spark jobs on this lane;
         # the distributed lane below is untouched past the gate.
-        blobs = _consolidate_dvs_driver_side(pos, dvs, live_by_norm)
-        if blobs is not None:
-            if not blobs:
-                return table._commit_snapshot(
-                    "replace", [], {f.path for f in pos} | {f.path for f in dvs}
+        tombs = driver_deletes([*pos, *dvs])
+        if tombs is not None:
+            # canonicalize each UNIQUE tombstone spelling once, map to
+            # the raw manifest spelling, drop dangling tombstones
+            pdf = tombs.to_pandas()
+            spell = {
+                s: live_by_norm.get(canonical_file_path(s))
+                for s in pdf["file_path"].unique()
+            }
+            pdf = pdf.assign(file_path=pdf["file_path"].map(spell))
+            pdf = pdf[pdf["file_path"].notna()]
+            entries = []
+            if len(pdf):
+                entries = write_dv_puffins(
+                    table,
+                    build_dv_blob_rows(pdf),
+                    table.meta.current_snapshot.snapshot_id,
+                    max_puffin_bytes=max_puffin_bytes,
                 )
-            entries = write_dv_puffins(
-                table,
-                blobs,
-                table.meta.current_snapshot.snapshot_id,
-                max_puffin_bytes=max_puffin_bytes,
-            )
             return table._commit_snapshot(
                 "replace", entries, {f.path for f in pos} | {f.path for f in dvs}
             )
@@ -440,65 +453,6 @@ def write_deletion_vectors(
     return table._commit_snapshot(
         "replace", entries, {f.path for f in pos} | {f.path for f in dvs}
     )
-
-
-def _consolidate_dvs_driver_side(pos, dvs, live_by_norm) -> list | None:
-    """Driver-side DV consolidation for gated small inputs: read the
-    position-delete parquet with pyarrow, decode prior DVs, substitute
-    raw manifest spellings, and build the per-file roaring blobs — all
-    bounded by the EXACT tombstone row count the manifest entries
-    already carry.  Returns None (caller keeps the distributed lane)
-    when any entry's count is unknown, past the gates, when a
-    tombstone file is not driver-readable, or when pyarrow is
-    unavailable."""
-    from .dv import (
-        DV_DRIVER_BUILD_MAX_ROWS,
-        build_dv_blob_rows,
-        dv_positions_pandas,
-    )
-    from .iceberg_import import canonical_file_path
-
-    total = 0
-    for e in [*pos, *dvs]:
-        if not e.record_count:
-            return None  # unknown volume: stay distributed
-        total += int(e.record_count)
-    if total > DV_DRIVER_BUILD_MAX_ROWS:
-        return None
-    if any(not os.path.isfile(f.path) for f in pos):
-        return None  # non-local tombstones: let Spark read them
-    try:
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-    except Exception:  # pragma: no cover — pyarrow/pandas unavailable
-        return None
-    # the canonical tombstone schema _pos_deletes_local casts to: files
-    # from other engines differ in nullability and string encoding
-    want = pa.schema([("file_path", pa.string()), ("pos", pa.int64())])
-    frames = []
-    for f in pos:
-        frames.append(
-            pq.read_table(f.path, columns=["file_path", "pos"]).cast(want).to_pandas()
-        )
-    if dvs:
-        dvf = dv_positions_pandas(dvs)
-        if dvf is None:
-            return None  # DV blobs exceed the decode gates
-        frames.append(dvf)
-    pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-    # distinct-spelling substitution (same discipline as the Spark
-    # lane): canonicalize each UNIQUE tombstone spelling once, map to
-    # the raw manifest spelling, drop dangling tombstones
-    spell = {
-        s: live_by_norm.get(canonical_file_path(s))
-        for s in pdf["file_path"].unique()
-    }
-    pdf = pdf.assign(file_path=pdf["file_path"].map(spell))
-    pdf = pdf[pdf["file_path"].notna()]
-    if not len(pdf):
-        return []
-    return build_dv_blob_rows(pdf)
 
 
 def _rewrite_manifests_distributed(table, prev) -> list[tuple] | None:
@@ -1314,7 +1268,7 @@ def _verify_manifests_distributed(
     Returns None below the threshold, when ``read.plan-mode=driver``
     pins the walk (the driver lane stays the below-threshold trust
     anchor), or on a non-picklable store.  The auto flip is ENTRY
-    -count-based (maint_bench r11: crossover ~256k entries with the
+    -count-based (measured in r11: crossover ~256k entries with the
     worst-case O(entries) findings collect; a healthy table crosses
     earlier) — ``fsck.auto.entry-threshold`` overrides."""
     import pickle

@@ -426,7 +426,7 @@ def write_partition_stats(table) -> str:
                 all_fields.append(pf.name)
     agg: dict = {}
     now = int(__import__("time").time() * 1000)
-    # pstats-specific auto-flip (r11, maint_bench-measured): the
+    # pstats-specific auto-flip (r11, measured): the
     # aggregation's driver/distributed crossover is ~256k ENTRIES —
     # the generic 64-manifest flip fired 4× too early and paid ~3.5 s
     # of Spark overhead at 128k.  Plan-mode pins still rule.

@@ -1453,7 +1453,7 @@ class IceTable:
     ) -> bool:
         """Plan-mode decision for maintenance ops whose work scales
         with ENTRY count, not manifest count (partition stats, fsck):
-        maint_bench r11 measured their driver/distributed crossover at
+        an r11 measurement put their driver/distributed crossover at
         ~256k entries — 4× past the generic 64-manifest flip, which
         paid ~3.5 s of Spark overhead at 128k entries for nothing.
         ``read.plan-mode`` pins still rule; ``prop`` overrides the
@@ -1655,119 +1655,6 @@ class IceTable:
             return self._lineage_df(files, dels)
         return self._read_with_deletes(files, dels, with_pos=with_pos)
 
-    def _pos_deletes_local(self, entries: list[DataFile], spellings=None):
-        """Gated driver read of position-delete parquet → a deduped
-        ``(file_path, pos)`` DataFrame backed by a LocalTableScan, or
-        None (caller keeps the distributed read) when the tombstones
-        exceed :data:`icepack.dv.DV_DRIVER_BUILD_MAX_ROWS`, are not
-        local files, or pyarrow is unavailable.  ``spellings`` (the
-        scan group's ``_spellings`` thunk) switches on the
-        canonical-spelling substitution the adopted/spec-primary scan
-        needs — done as dict work here instead of a broadcast map
-        join.  Tombstone volume is bounded by the entries' manifest
-        record counts, so the gate is exact and costs no job."""
-        from .dv import DV_DRIVER_BUILD_MAX_ROWS
-
-        total = 0
-        for e in entries:
-            if not e.record_count:
-                return None  # unknown volume: stay distributed
-            total += int(e.record_count)
-        if total > DV_DRIVER_BUILD_MAX_ROWS:
-            return None
-        if any(not os.path.isfile(e.path) for e in entries):
-            return None
-        try:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-        except Exception:  # pragma: no cover — pyarrow unavailable
-            return None
-        # cast to one canonical schema first: files written by different
-        # engines disagree on nullability (and string width), which
-        # concat_tables treats as different schemas
-        want = pa.schema([("file_path", pa.string()), ("pos", pa.int64())])
-        tbls = [
-            pq.read_table(e.path, columns=["file_path", "pos"]).cast(want)
-            for e in entries
-        ]
-        pdf = (
-            (pa.concat_tables(tbls) if len(tbls) > 1 else tbls[0])
-            .to_pandas()
-            .drop_duplicates()
-        )
-        if spellings is not None:
-            from .iceberg_import import canonical_file_path
-
-            by_cn = {cn: sp for sp, cn in spellings()}
-            remap = {
-                s: by_cn.get(canonical_file_path(s))
-                for s in pdf["file_path"].unique()
-            }
-            pdf = pdf.assign(file_path=pdf["file_path"].map(remap))
-            pdf = pdf[pdf["file_path"].notna()]  # unmatched deletes drop
-        return self.spark.createDataFrame(pdf, "file_path string, pos long")
-
-    def _eq_deletes_local(self, dentries: list, eq_map: tuple):
-        """Gated driver read of equality-delete parquet → the deduped
-        ``_del_*`` key frame as a LocalTableScan, or None (caller keeps
-        the distributed read).  Same discipline as
-        :meth:`_pos_deletes_local`; value types are pinned EXACTLY by
-        declaring the delete schema version's spark types on the Arrow
-        table (a merged-read upcast across mixed schema versions can't
-        be replicated here, so mixed groups fall back)."""
-        from .dv import DV_DRIVER_BUILD_MAX_ROWS
-
-        total = 0
-        for d, _s in dentries:
-            if not d.record_count or not os.path.isfile(d.path):
-                return None
-            total += int(d.record_count)
-        if total > DV_DRIVER_BUILD_MAX_ROWS:
-            return None
-        old_types = None
-        for _d, dschema in dentries:
-            types = tuple(
-                dschema.field_by_name(old).spark_type() for old, _cur in eq_map
-            )
-            if old_types is None:
-                old_types = types
-            elif types != old_types:
-                return None  # mixed-version value types: let Spark merge
-        try:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            from pyspark.sql.pandas.types import to_arrow_type
-
-            olds = [old for old, _cur in eq_map]
-            # one canonical arrow schema (the delete schema version's
-            # types, nullable): engines disagree on nullability, which
-            # concat_tables treats as different schemas
-            want = pa.schema(
-                [
-                    (old, to_arrow_type(t))
-                    for (old, _cur), t in zip(eq_map, old_types)
-                ]
-            )
-            tbls = [
-                pq.read_table(d.path, columns=olds).cast(want)
-                for d, _s in dentries
-            ]
-            tbl = pa.concat_tables(tbls) if len(tbls) > 1 else tbls[0]
-            tbl = tbl.group_by(tbl.schema.names).aggregate([])  # DISTINCT
-            schema = T.StructType(
-                [
-                    T.StructField(f"_del_{cur}", t)
-                    for (_old, cur), t in zip(eq_map, old_types)
-                ]
-            )
-            return self.spark.createDataFrame(
-                tbl.rename_columns([f"_del_{cur}" for _old, cur in eq_map]),
-                schema=schema,
-            )
-        except Exception:  # pragma: no cover — exotic types/pyarrow gaps
-            return None
-
     def _read_with_deletes(
         self,
         files: list[DataFile],
@@ -1864,35 +1751,44 @@ class IceTable:
                         ]
                 return spell_pairs
 
+            def _driver_tombstones(entries, remap: bool):
+                # gated driver lane (dv.driver_deletes): the tombstones
+                # feed the broadcast anti-join as ONE LocalTableScan
+                # instead of a distributed read + distinct, or a Python
+                # executor decode, per scan construction.  ``remap``
+                # substitutes the scan's ``_file`` spellings by
+                # canonical path as dict work; unmatched tombstones drop
+                from .dv import driver_deletes
+
+                tbl = driver_deletes(entries)
+                if tbl is None:
+                    return None
+                pdf = tbl.to_pandas().drop_duplicates()
+                if remap:
+                    from .iceberg_import import canonical_file_path
+
+                    by_cn = {cn: sp for sp, cn in _spellings()}
+                    sp = {
+                        s: by_cn.get(canonical_file_path(s))
+                        for s in pdf["file_path"].unique()
+                    }
+                    pdf = pdf.assign(file_path=pdf["file_path"].map(sp))
+                    pdf = pdf[pdf["file_path"].notna()]
+                return self.spark.createDataFrame(pdf, "file_path string, pos long")
+
+            tombstones = []
             if dvg:
                 # one anti-join applies every DV of the group: the
                 # (file_path, pos) identity keeps each bitmap scoped to
-                # its own file.  Blobs decode in EXECUTORS
-                # (dv.dv_positions_df); target identities are known
-                # driver-side, so their canonical forms cost O(files)
-                # Python calls here, not a distributed stage.
-                from .dv import dv_positions_df, dv_positions_pandas
-                from .iceberg_import import canonical_file_path
+                # its own file.  Past the driver gate blobs decode in
+                # EXECUTORS (dv.dv_positions_df); target identities are
+                # known driver-side, so their canonical forms cost
+                # O(files) Python calls here, not a distributed stage.
+                dd = _driver_tombstones(dvg, remap=True)
+                if dd is None:
+                    from .dv import dv_positions_df
+                    from .iceberg_import import canonical_file_path
 
-                pdfv = dv_positions_pandas(dvg)
-                if pdfv is not None:
-                    # gated driver lane: positions, DV target refs and
-                    # scan spellings are ALL driver-resident here, so
-                    # the (refs ⨝ spellings) remap is plain dict work —
-                    # ONE broadcast LocalTableScan feeds the anti-join
-                    # instead of a three-frame broadcast-join pipeline
-                    # (two fewer exchanges per DV-masked scan)
-                    canon_to_sp = {cn: sp for sp, cn in _spellings()}
-                    remap = {
-                        rdf: canon_to_sp.get(canonical_file_path(rdf))
-                        for rdf in {d.referenced_data_file for d in dvg}
-                    }
-                    pdfv = pdfv.assign(_delsp=pdfv["file_path"].map(remap))
-                    pdfv = pdfv[pdfv["_delsp"].notna()]
-                    dd = self.spark.createDataFrame(
-                        pdfv[["_delsp", "pos"]], "_delsp string, pos long"
-                    )
-                else:
                     refs = local_df(
                         self.spark,
                         {
@@ -1912,89 +1808,68 @@ class IceTable:
                             ),
                             "_cn",
                         )
-                        .select(F.col("_sp").alias("_delsp"), "pos")
+                        .select(F.col("_sp").alias("file_path"), "pos")
                     )
-                df = df.join(
-                    F.broadcast(dd),
-                    (df["_file"] == dd["_delsp"]) & (df["_pos"] == dd["pos"]),
-                    "left_anti",
-                )
-                if not (with_pos or pos_paths):
-                    df = df.drop("_file", "_pos")
+                tombstones.append(dd)
             if pos_paths:
                 canon_join = self.spec_primary or (
                     self.meta.properties.get("read.canonicalize-delete-file-paths")
                     == "true"
                 )
-                dels = self._pos_deletes_local(
-                    [by_path[p] for p in pos_paths],
-                    _spellings if canon_join else None,
+                dels = _driver_tombstones(
+                    [by_path[p] for p in pos_paths], canon_join
                 )
-                if dels is not None:
-                    # gated driver lane: the tombstones (bounded by
-                    # their manifest record counts) feed the broadcast
-                    # anti-join as ONE LocalTableScan — the broadcast
-                    # build no longer runs a distributed parquet read +
-                    # distinct per scan construction (guide §4/§1.2)
-                    df = df.join(
-                        F.broadcast(dels),
-                        (df["_file"] == dels["file_path"])
-                        & (df["_pos"] == dels["pos"]),
-                        "left_anti",
+                if dels is None:
+                    dels = (
+                        read_files(self.spark, pos_paths)
+                        .select("file_path", "pos")
+                        .distinct()
                     )
-                    if not with_pos:
-                        df = df.drop("_file", "_pos")
-                    pos_paths = []
-            if pos_paths:
-                dels = (
-                    read_files(self.spark, pos_paths)
-                    .select("file_path", "pos")
-                    .distinct()
-                )
-                if canon_join:
-                    # spec-shaped delete files store CANONICAL raw
-                    # paths (external engines compare them to manifest
-                    # paths), and adopted foreign trees set the
-                    # property above.  Foreign engines commonly spell
-                    # file_path as a ``file:/abs/path`` URI, and a
-                    # verbatim compare would never match, silently
-                    # resurrecting deleted rows on adopted tables — so
-                    # the delete side's DISTINCT paths (bounded: delete
-                    # files are small by design) collect, canonicalize
-                    # in plain driver Python, and substitute through a
-                    # broadcast LocalTableScan map onto the scan's
-                    # actual ``_file`` spellings — no pandas-UDF stage
-                    # in the broadcast build (r13: each such stage
-                    # costs ~0.5 s of fixed JVM↔Python latency), and
-                    # the data side stays JVM.
-                    from .iceberg_import import canonical_file_path
+                    if canon_join:
+                        # spec-shaped delete files store CANONICAL raw
+                        # paths (external engines compare them to manifest
+                        # paths), and adopted foreign trees set the
+                        # property above.  Foreign engines commonly spell
+                        # file_path as a ``file:/abs/path`` URI, and a
+                        # verbatim compare would never match, silently
+                        # resurrecting deleted rows on adopted tables — so
+                        # the delete side's DISTINCT paths (bounded: delete
+                        # files are small by design) collect, canonicalize
+                        # in plain driver Python, and substitute through a
+                        # broadcast LocalTableScan map onto the scan's
+                        # actual ``_file`` spellings — no pandas-UDF stage
+                        # in the broadcast build (r13: each such stage
+                        # costs ~0.5 s of fixed JVM↔Python latency), and
+                        # the data side stays JVM.
+                        from .iceberg_import import canonical_file_path
 
-                    by_cn = {cn: sp for sp, cn in _spellings()}
-                    dsp = [
-                        r[0]
-                        for r in dels.select("file_path").distinct().collect()
-                    ]
-                    rows = []
-                    for s in dsp:
-                        sp = by_cn.get(canonical_file_path(s))
-                        if sp is not None:  # unmatched deletes drop, as before
-                            rows.append((s, sp))
-                    dels = dels.join(
-                        F.broadcast(
-                            local_df(
-                                self.spark, rows, "file_path string, _sp string"
-                            )
-                        ),
-                        "file_path",
-                    ).select(F.col("_sp").alias("file_path"), "pos")
+                        by_cn = {cn: sp for sp, cn in _spellings()}
+                        dsp = [
+                            r[0]
+                            for r in dels.select("file_path").distinct().collect()
+                        ]
+                        rows = []
+                        for s in dsp:
+                            sp = by_cn.get(canonical_file_path(s))
+                            if sp is not None:  # unmatched deletes drop, as before
+                                rows.append((s, sp))
+                        dels = dels.join(
+                            F.broadcast(
+                                local_df(
+                                    self.spark, rows, "file_path string, _sp string"
+                                )
+                            ),
+                            "file_path",
+                        ).select(F.col("_sp").alias("file_path"), "pos")
+                tombstones.append(dels)
+            for dels in tombstones:
                 df = df.join(
                     F.broadcast(dels),
-                    (df["_file"] == dels["file_path"])
-                    & (df["_pos"] == dels["pos"]),
+                    (df["_file"] == dels["file_path"]) & (df["_pos"] == dels["pos"]),
                     "left_anti",
                 )
-                if not with_pos:
-                    df = df.drop("_file", "_pos")
+            if tombstones and not with_pos:
+                df = df.drop("_file", "_pos")
             # Equality deletes are keyed by FIELD ID, not name (Iceberg
             # spec): a delete file stores the column names current at
             # delete time, while _read_files reconciles data to the
@@ -2023,18 +1898,62 @@ class IceTable:
                         resolved.append((c, f_cur.name))
                     by_cols.setdefault(tuple(resolved), []).append((d, dschema))
             for eq_map, dentries in sorted(by_cols.items()):
-                dels = self._eq_deletes_local(dentries, eq_map)
-                if dels is None:
-                    dels = (
-                        read_files(self.spark, [d.path for d, _ in dentries])
-                        .select(
-                            *[
-                                F.col(old).alias(f"_del_{cur}")
-                                for old, cur in eq_map
-                            ]
-                        )
-                        .distinct()
+                # delete files by the key types of their schema version
+                by_types: dict[tuple, list] = {}
+                for d, ds in dentries:
+                    types = tuple(
+                        ds.field_by_name(old).spark_type() for old, _ in eq_map
                     )
+                    by_types.setdefault(types, []).append(d.path)
+                dels = None
+                # gated driver lane (dv.driver_deletes), read with the
+                # delete schema version's exact types; the union's
+                # widening across mixed versions belongs to Spark
+                if len(by_types) == 1:
+                    import pyarrow as pa
+                    from pyspark.sql.pandas.types import to_arrow_type
+
+                    from .dv import driver_deletes
+
+                    try:
+                        tbl = driver_deletes(
+                            [d for d, _ in dentries],
+                            pa.schema(
+                                [
+                                    (old, to_arrow_type(t))
+                                    for (old, _), t in zip(eq_map, types)
+                                ]
+                            ),
+                        )
+                        if tbl is not None:
+                            tbl = tbl.group_by(tbl.schema.names).aggregate([])
+                            dels = self.spark.createDataFrame(
+                                tbl.rename_columns(
+                                    [f"_del_{cur}" for _, cur in eq_map]
+                                ),
+                                schema=T.StructType(
+                                    [
+                                        T.StructField(f"_del_{cur}", t)
+                                        for (_, cur), t in zip(eq_map, types)
+                                    ]
+                                ),
+                            )
+                    except (TypeError, ValueError, pa.ArrowException):
+                        pass  # no Arrow form for a key type: Spark read
+                if dels is None:
+                    # Spark reads a path list with ONE file's key types,
+                    # so each type group is read on its own and the
+                    # union widens them to a common type
+                    reads = [
+                        read_files(self.spark, paths).select(
+                            *[F.col(old).alias(f"_del_{cur}") for old, cur in eq_map]
+                        )
+                        for paths in by_types.values()
+                    ]
+                    dels = reads[0]
+                    for r in reads[1:]:
+                        dels = dels.unionByName(r)
+                    dels = dels.distinct()
                 # Iceberg equality-delete semantics: field-by-field
                 # equality with null == null (spec "Equality Delete
                 # Files"), so the anti-join must be NULL-SAFE — a plain

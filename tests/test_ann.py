@@ -5,6 +5,7 @@ deterministic (fixed seeds, fixed data), so thresholds are exact
 floors measured on the fixture, not statistical hopes."""
 
 import numpy as np
+import pytest
 
 from icepack.ann import ivf_topk, train_ivf
 from icepack.io import load
@@ -58,6 +59,42 @@ def test_ivf_probe_all_equals_bruteforce(spark):
     sims = En @ En[0]
     order = [int(j) for j in np.argsort(-np.round(sims, 12)) if j != 0][:10]
     assert set(got) == set(order)
+
+
+def _ragged(spark):
+    """Three embeddings; the second is one dim wider than the rest."""
+    e = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0, 0.5]), (2, [1.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    return e, np.asarray([[1.0, 0.0], [0.0, 1.0]])
+
+
+def test_ivf_topk_width_check_runs_no_job(spark):
+    """Building the search plan checks the query width on the driver
+    and launches no Spark job."""
+    e, cents = _ragged(spark)
+    e = e.filter("vec_id != 1")
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-build", "ivf-build")
+    try:
+        df = ivf_topk(e, [1.0, 0.0], cents, k=2)
+        with pytest.raises(ValueError, match="3 dims but the centroids have 2"):
+            ivf_topk(e, [1.0, 0.0, 0.0], cents, k=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("ivf-build")) == []
+    assert [r.vec_id for r in df.collect()] == [0, 2]
+
+
+def test_ivf_topk_rejects_a_ragged_row_past_the_first(spark):
+    """A stored embedding of another width anywhere in the column fails
+    the search instead of being truncated."""
+    e, cents = _ragged(spark)
+    with pytest.raises(Exception, match="embedding of vec_id 1 does not have 2 dims"):
+        ivf_topk(e, [1.0, 0.0], cents, nprobe=2, k=3).collect()
 
 
 def test_lsh_probe_all_equals_bruteforce_and_floor(spark):

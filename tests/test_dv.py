@@ -544,26 +544,26 @@ def test_dv_decode_cardinality_gate(spark, tmp_path, monkeypatch):
     dvs = [f for f in t.live_files(content="all") if f.content == "deletion-vectors"]
     assert dvs and all(f.record_count for f in dvs)
 
-    # within both gates: driver lane
-    pdf = dv.dv_positions_pandas(dvs)
-    assert pdf is not None and len(pdf) == 50
+    # within the row bound: driver lane
+    tbl = dv.driver_deletes(dvs)
+    assert tbl is not None and tbl.num_rows == 50
     plan_driver = dv.dv_positions_df(spark, dvs)._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan_driver and "MapInPandas" not in plan_driver
 
     # cardinality above the row gate: executor lane even though the
     # serialized bytes stay tiny
-    monkeypatch.setattr(dv, "DV_DRIVER_DECODE_MAX_ROWS", 10)
-    assert dv.driver_decodable(dvs) is False
-    assert dv.dv_positions_pandas(dvs) is None
+    monkeypatch.setattr(dv, "DRIVER_MAX_ROWS", 10)
+    assert dv.driver_deletes(dvs) is None
     df_exec = dv.dv_positions_df(spark, dvs)
     assert "MapInPandas" in df_exec._jdf.queryExecution().executedPlan().toString()
-    assert sorted(r.pos for r in df_exec.collect()) == sorted(pdf["pos"].tolist())
+    assert sorted(r.pos for r in df_exec.collect()) == sorted(tbl["pos"].to_pylist())
 
-    # unknown cardinality: conservative executor lane
+    # unknown cardinality: conservative executor lane, at the default bound
     import dataclasses as dc
 
+    monkeypatch.undo()
     unk = [dc.replace(dvs[0], record_count=0)]
-    assert dv.driver_decodable(unk) is False
+    assert dv.driver_deletes(unk) is None
 
 
 def test_dv_blob_rows_matches_applyinpandas_lane(spark):
@@ -592,9 +592,9 @@ def test_dv_dml_lanes_agree_end_to_end(spark, tmp_path, monkeypatch):
 
     def chain(base, force_distributed):
         if force_distributed:
-            monkeypatch.setattr(dv, "DV_DRIVER_BUILD_MAX_ROWS", 0)
+            monkeypatch.setattr(dv, "DRIVER_MAX_ROWS", 0)
         else:
-            monkeypatch.setattr(dv, "DV_DRIVER_BUILD_MAX_ROWS", 4_000_000)
+            monkeypatch.setattr(dv, "DRIVER_MAX_ROWS", 4_000_000)
         df = spark.range(0, 400).withColumn("v", (F.col("id") * 13) % 7)
         t = IceTable.create(
             spark, str(tmp_path / base), df.schema,
@@ -632,7 +632,7 @@ def test_consolidation_lanes_agree(spark, tmp_path, monkeypatch):
 
     def run(base, force_distributed):
         monkeypatch.setattr(
-            dv, "DV_DRIVER_BUILD_MAX_ROWS",
+            dv, "DRIVER_MAX_ROWS",
             0 if force_distributed else 4_000_000,
         )
         df = spark.range(0, 500).withColumn("v", (F.col("id") * 29) % 13)
@@ -671,7 +671,7 @@ def test_pos_delete_scan_lanes_agree(spark, tmp_path, monkeypatch):
 
     def run(base, force_distributed):
         monkeypatch.setattr(
-            dv, "DV_DRIVER_BUILD_MAX_ROWS",
+            dv, "DRIVER_MAX_ROWS",
             0 if force_distributed else 4_000_000,
         )
         df = spark.range(0, 300).withColumn("v", (F.col("id") * 7) % 5)
@@ -688,21 +688,19 @@ def test_pos_delete_scan_lanes_agree(spark, tmp_path, monkeypatch):
 
     assert run("pdrv", False) == run("pdst", True)
     # gate refusal is observable directly too
-    monkeypatch.setattr(dv, "DV_DRIVER_BUILD_MAX_ROWS", 4_000_000)
+    monkeypatch.setattr(dv, "DRIVER_MAX_ROWS", 4_000_000)
     t, _df = _mor_table(spark, tmp_path, n=100)
     t.delete(col("id") < 10)
     pos = [f for f in t.live_files(content="deletes")
            if f.content == "position-deletes"]
-    assert t._pos_deletes_local(pos) is not None
-    monkeypatch.setattr(dv, "DV_DRIVER_BUILD_MAX_ROWS", 0)
-    assert t._pos_deletes_local(pos) is None
+    assert dv.driver_deletes(pos) is not None
+    monkeypatch.setattr(dv, "DRIVER_MAX_ROWS", 0)
+    assert dv.driver_deletes(pos) is None
 
 
 def _consolidation_inputs(spark, tmp_path):
     """A v2 MOR table with one position delete, then one folded into a
-    DV and a second position delete: (pos, dvs, live_by_norm)."""
-    from icepack.iceberg_import import canonical_file_path
-
+    DV and a second position delete: (table, pos, dvs)."""
     t, _df = _mor_table(spark, tmp_path, n=200)
     t.delete(col("id") < 10)
     M.write_deletion_vectors(t)
@@ -711,10 +709,7 @@ def _consolidation_inputs(spark, tmp_path):
     pos = [f for f in live if f.content == "position-deletes"]
     dvs = [f for f in live if f.content == "deletion-vectors"]
     assert pos and dvs
-    live_by_norm = {
-        canonical_file_path(f.path): f.path for f in live if f.content == "data"
-    }
-    return pos, dvs, live_by_norm
+    return t, pos, dvs
 
 
 def test_consolidation_driver_lane_refuses_unknown_counts(spark, tmp_path):
@@ -724,15 +719,15 @@ def test_consolidation_driver_lane_refuses_unknown_counts(spark, tmp_path):
     scan-side and DML driver lanes do."""
     import dataclasses
 
-    from icepack.maintenance import _consolidate_dvs_driver_side
+    import icepack.dv as dv
 
-    pos, dvs, live_by_norm = _consolidation_inputs(spark, tmp_path)
-    assert _consolidate_dvs_driver_side(pos, dvs, live_by_norm)
+    _t, pos, dvs = _consolidation_inputs(spark, tmp_path)
+    assert dv.driver_deletes([*pos, *dvs]) is not None
     for unknown in (None, 0):
         bad_pos = [dataclasses.replace(pos[0], record_count=unknown), *pos[1:]]
-        assert _consolidate_dvs_driver_side(bad_pos, dvs, live_by_norm) is None
+        assert dv.driver_deletes([*bad_pos, *dvs]) is None
         bad_dvs = [dataclasses.replace(dvs[0], record_count=unknown), *dvs[1:]]
-        assert _consolidate_dvs_driver_side(pos, bad_dvs, live_by_norm) is None
+        assert dv.driver_deletes([*pos, *bad_dvs]) is None
 
 
 def test_consolidation_driver_lane_casts_tombstones(spark, tmp_path, monkeypatch):
@@ -744,29 +739,37 @@ def test_consolidation_driver_lane_casts_tombstones(spark, tmp_path, monkeypatch
     import pyarrow.parquet as pq
 
     import icepack.dv as dv
-    from icepack.maintenance import _consolidate_dvs_driver_side
 
-    pos, _dvs, live_by_norm = _consolidation_inputs(spark, tmp_path)
-    want = _consolidate_dvs_driver_side(pos, [], live_by_norm)
-    for f in pos:
-        tbl = pq.read_table(f.path, columns=["file_path", "pos"])
-        pq.write_table(
-            pa.table(
-                {
-                    "file_path": tbl["file_path"].dictionary_encode(),
-                    "pos": tbl["pos"].cast(pa.int32()),
-                }
-            ),
-            f.path,
-        )
-    seen = []
     build = dv.build_dv_blob_rows
 
-    def spy(pdf):
-        seen.append(pdf.dtypes.astype(str).to_dict())
-        return build(pdf)
+    def consolidate(base, foreign):
+        t, pos, _dvs = _consolidation_inputs(spark, tmp_path / base)
+        if foreign:
+            for f in pos:
+                tbl = pq.read_table(f.path, columns=["file_path", "pos"])
+                pq.write_table(
+                    pa.table(
+                        {
+                            "file_path": tbl["file_path"].dictionary_encode(),
+                            "pos": tbl["pos"].cast(pa.int32()),
+                        }
+                    ),
+                    f.path,
+                )
+        seen, blobs = [], []
 
-    monkeypatch.setattr(dv, "build_dv_blob_rows", spy)
-    got = _consolidate_dvs_driver_side(pos, [], live_by_norm)
+        def spy(pdf):
+            seen.append(pdf.dtypes.astype(str).to_dict())
+            out = build(pdf)
+            blobs.extend(sorted((r["cardinality"], r["blob"]) for r in out))
+            return out
+
+        monkeypatch.setattr(dv, "build_dv_blob_rows", spy)
+        assert M.write_deletion_vectors(t) is not None
+        monkeypatch.setattr(dv, "build_dv_blob_rows", build)
+        return seen, blobs
+
+    _seen, want = consolidate("own", foreign=False)
+    seen, got = consolidate("foreign", foreign=True)
     assert seen == [{"file_path": "object", "pos": "int64"}]
     assert got == want

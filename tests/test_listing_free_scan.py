@@ -132,8 +132,8 @@ def test_scans_and_compact_launch_no_listing_job(
     live = t.live_files(content="all")
     assert {f.content for f in live} >= {"deletion-vectors", "position-deletes"}
     expect = rows_sorted(plain.where("id % 10 NOT IN (3, 5)"))
-    for build_max in (dv.DV_DRIVER_BUILD_MAX_ROWS, 0):  # driver lane, then Spark
-        monkeypatch.setattr(dv, "DV_DRIVER_BUILD_MAX_ROWS", build_max)
+    for bound in (dv.DRIVER_MAX_ROWS, 0):  # driver lane, then Spark
+        monkeypatch.setattr(dv, "DRIVER_MAX_ROWS", bound)
         with _jobs(spark) as descs:
             got = rows_sorted(t.toDF())
         check(descs)

@@ -251,7 +251,7 @@ def test_partition_stats_distributed_on_spec_primary(spark, tmp_path, monkeypatc
 
 def test_pstats_entry_threshold_auto_flip(spark, tmp_path, monkeypatch):
     """r11 (VERDICT r10 item 7): partition stats flips lanes on the
-    ENTRY-count estimate (maint_bench crossover ~256k), not the
+    ENTRY-count estimate (measured crossover ~256k), not the
     64-manifest count — a 128-manifest/small-entry table stays on the
     cheaper driver walk in auto mode, and the property override plus
     plan-mode pins still rule."""
